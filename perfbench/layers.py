@@ -2,10 +2,13 @@
 Spark event log. Every per-layer metric is reported on every workload; a
 layer the workload never calls reads 0.
 
-Units: ``*_s`` are seconds per timed operation (a card request, a pipeline
-pass, a curation query), except ``operators.*.exec_s`` and
-``streaming.exec_s``, which are seconds per pass. ``spark.*`` counters are
-per operation too.
+Units: ``api.*`` are per card request; ``registry.build_s`` and
+``registry.models_resolved`` per card request on ``query`` and per pipeline
+pass on ``refresh`` (whose marts build models too); ``ingest.*``,
+``registry.materialize*`` and ``validation.*`` per pipeline pass;
+``operators.*.exec_s``, ``streaming.exec_s`` and ``curation.*`` per pass
+over the workload's operations; ``spark.*`` counters per timed operation
+of any kind.
 """
 
 from __future__ import annotations
@@ -38,25 +41,34 @@ def per_layer(spans, counters, workload, runner, session_s, overhead_pct, cached
     n_ops = max(len(ops), 1)
     by_id = {s["id"]: s for s in spans}
     total: dict[str, float] = defaultdict(float)
+    count: dict[str, int] = defaultdict(int)
     for s in spans:
         total[s["name"]] += duration(s)
+        count[s["name"]] += 1
+    n_cards = max(count["api.sql.build"], 1)
+    n_refresh = max(count["etl.run_pipeline"], 1)
 
-    def per_op(name: str) -> float:
-        return total[name] / n_ops
+    def per_card(name: str) -> float:
+        return total[name] / n_cards
+
+    def per_refresh(name: str) -> float:
+        return total[name] / n_refresh
+
+    n_builds = n_cards if count["api.sql.build"] else n_refresh
 
     out = {
         "session.get_spark_s": session_s,
-        "api.sql.build_s": per_op("api.sql.build"),
-        "api.sql.plan_s": per_op("api.sql.plan"),
-        "api.sql.exec_s": per_op("api.sql.exec"),
-        "api.register_views_s": per_op("api.register_views"),
-        "registry.build_s": per_op("registry.build"),
-        "registry.models_resolved": sum(s.get("models_resolved", 0) for s in spans) / n_ops,
+        "api.sql.build_s": per_card("api.sql.build"),
+        "api.sql.plan_s": per_card("api.sql.plan"),
+        "api.sql.exec_s": per_card("api.sql.exec"),
+        "api.register_views_s": per_card("api.register_views"),
+        "registry.build_s": total["registry.build"] / n_builds,
+        "registry.models_resolved": sum(s.get("models_resolved", 0) for s in spans) / n_builds,
         "api.cached_mb": cached["mb"],
         "api.cached_rdds": cached["rdds"],
         "peak_rss_mb": peak_mb,
-        "ingest.ingest_dir_s": per_op("ingest.ingest_dir"),
-        "registry.materialize_s": per_op("registry.materialize"),
+        "ingest.ingest_dir_s": per_refresh("ingest.ingest_dir"),
+        "registry.materialize_s": per_refresh("registry.materialize"),
         "trace.overhead_pct": overhead_pct,
         "error_rate": runner.failed / max(runner.attempted, 1),
     }
@@ -74,8 +86,8 @@ def per_layer(spans, counters, workload, runner, session_s, overhead_pct, cached
             if mats:
                 checks_s += s["end"] - mats[-1]["end"]
     for mart in REFRESH_MARTS:
-        out[f"registry.materialize.{mart}_s"] = mart_s[mart] / n_ops
-    out["validation.run_checks_s"] = checks_s / n_ops
+        out[f"registry.materialize.{mart}_s"] = mart_s[mart] / n_refresh
+    out["validation.run_checks_s"] = checks_s / n_refresh
 
     # operator families, per pass (the traced run times one): time inside
     # their public functions, plus the plan and exec phases of the curation

@@ -1,15 +1,15 @@
 #!/usr/bin/env python3
 """Warehouse benchmark: one workload, one seed, one process.
 
-    python3 perfbench/run.py --workload dashboard --seed 1 --seconds 5 --trace 0
+    python3 perfbench/run.py --workload query --seed 1 --seconds 10 --trace 0
 
-Runs from the root of a checkout on ``local[$SPARK_GRAFT_CPUS]`` (default
-4). The first run in a checkout builds the inputs and oracles into
-``.perfbench/cache`` (``build.py``); every run writes only under
-``.perfbench/``. A run starts the session, warms it (``setup_s``), then
-times whole passes of the workload until ``--seconds`` have passed (at
-least one pass), checks every result against its oracle, and prints one
-JSON line last: ``correct``, ``attempted``, ``failed`` and ``metrics``
+Runs from the root of a checkout on ``local[1]``. The first run in a
+checkout builds the inputs and oracles into ``.perfbench/cache``
+(``build.py``); every run writes only under ``.perfbench/``. A run starts
+the session and warms it (``setup_s``), then times operations in pass
+order until ``--seconds`` have passed and every operation of a pass has
+run, checks every result against its oracle, and prints one JSON line
+last: ``correct``, ``attempted``, ``failed`` and ``metrics``
 (the end-to-end metrics with ``--trace 0``, the per-layer metrics with
 ``--trace 1``). A fuller record (seed, input sizes, host) goes to the line
 before it and to ``.perfbench/runs/<run>/record.json``. See README.md.
@@ -18,6 +18,7 @@ before it and to ``.perfbench/runs/<run>/record.json``. See README.md.
 from __future__ import annotations
 
 import argparse
+import gc
 import json
 import os
 import shutil
@@ -31,6 +32,7 @@ HERE = os.path.dirname(os.path.abspath(__file__))
 ROOT = os.path.dirname(HERE)
 WORK = os.path.join(ROOT, ".perfbench")
 BENCHMARK_JSON = os.path.join(ROOT, "BENCHMARK.json")
+CPUS = "1"
 
 
 def _configure_env(tmp: str) -> None:
@@ -39,7 +41,10 @@ def _configure_env(tmp: str) -> None:
     os.makedirs(tmp)
     os.environ["TMPDIR"] = tmp
     os.environ["SPARK_LOCAL_DIRS"] = os.path.join(tmp, "spark-local")
-    os.environ.setdefault("SPARK_GRAFT_CPUS", "4")
+    # one task thread: the host's four cores are shared with other
+    # tenants, and four task threads plus the driver, py4j and JIT threads
+    # measured the host's scheduler (run-to-run spreads up to 40 %)
+    os.environ["SPARK_GRAFT_CPUS"] = CPUS
     jvm_opts = f"-Djava.io.tmpdir={tmp} -XX:-UsePerfData"
     os.environ["SPARK_LAUNCHER_OPTS"] = jvm_opts  # spark-submit's launcher JVM
     os.environ["PYSPARK_SUBMIT_ARGS"] = f'--driver-java-options "{jvm_opts}" pyspark-shell'
@@ -67,15 +72,13 @@ def percentile(values: list[float], q: float) -> float:
     return float(np.percentile(values, q))
 
 
-def latencies(workload, timing: dict) -> list[float]:
-    return timing["op_latencies_s"] if workload.per_request else timing["pass_s"]
-
-
-def end_to_end(setup_s: float, latency: list[float], passes: list[float]) -> dict[str, float]:
+def end_to_end(setup_s: float, per_op: dict[str, list[float]]) -> dict[str, float]:
+    """``op_p50_s``: the median of every timed operation; ``pass_s``: one
+    pass, as the sum over its operations of each one's median."""
     return {
         "setup_s": setup_s,
-        "op_p50_s": statistics.median(latency),
-        "pass_s": statistics.median(passes),
+        "op_p50_s": statistics.median([t for ts in per_op.values() for t in ts]),
+        "pass_s": sum(statistics.median(ts) for ts in per_op.values()),
     }
 
 
@@ -142,31 +145,45 @@ class Runner:
         return elapsed
 
 
-def measured(runner: Runner, seconds: float) -> dict:
-    latencies, passes = [], []
-    t0 = time.perf_counter()
-    while not passes or time.perf_counter() - t0 < seconds:
-        times = [runner.run_op(op) for op in runner.wl.one_pass()]
-        latencies += times
-        passes.append(sum(times))
-    return {"op_latencies_s": latencies, "pass_s": passes}
+def collect_heaps(spark) -> None:
+    """Collect the Python and JVM heaps, so that a collection the previous
+    pass left due does not land in the next one's time."""
+    gc.collect()
+    spark.sparkContext._jvm.java.lang.System.gc()
+
+
+def measured(runner: Runner, seconds: float) -> dict[str, list[float]]:
+    """Operations in pass order, pass after pass, until ``seconds`` have
+    passed and each operation of a pass has run at least once; returns
+    every operation's latencies."""
+    ops = runner.wl.one_pass()
+    per_op: dict[str, list[float]] = {op.name: [] for op in ops}
+    t0, i = time.perf_counter(), 0
+    while i < len(ops) or time.perf_counter() - t0 < seconds:
+        if i % len(ops) == 0:
+            collect_heaps(runner.wl.spark)
+        op = ops[i % len(ops)]
+        per_op[op.name].append(runner.run_op(op))
+        i += 1
+    return per_op
 
 
 def traced(runner: Runner) -> dict:
-    """Each operation of one pass runs once to warm up, then untraced and
-    traced in alternating order. The traced copy is tagged with a job
-    group and recorded in spans."""
+    """After the workload's warm-up operations, each operation of one pass
+    runs untraced and traced, in alternating order. The traced copy is
+    tagged with a job group and recorded in spans."""
+    for op in runner.wl.warmup_ops():
+        runner.run_op(op)
     plain, tagged, latency = 0.0, 0.0, []
     for i, op in enumerate(runner.wl.one_pass()):
-        runner.run_op(op)
         for trace_it in ((False, True) if i % 2 == 0 else (True, False)):
+            collect_heaps(runner.wl.spark)
             if trace_it:
                 tagged += runner.run_op(op, traced=True, group=f"perfbench-op{i}")
             else:
                 latency.append(runner.run_op(op))
         plain += latency[-1]
-    return {"overhead_pct": 100.0 * (tagged - plain) / plain,
-            "op_latencies_s": latency, "pass_s": [plain]}
+    return {"overhead_pct": 100.0 * (tagged - plain) / plain, "op_latencies_s": latency}
 
 
 def main(argv: list[str] | None = None) -> int:
@@ -211,12 +228,11 @@ def main(argv: list[str] | None = None) -> int:
     spark.range(1).count()
     session_s = time.perf_counter() - t0
     wl.spark = spark
-    wl.warm()
-    setup_s = time.perf_counter() - t0
-
     tracer = spans.Tracer() if args.trace else None
     runner = Runner(wl, tracer)
     try:
+        wl.warm()
+        setup_s = time.perf_counter() - t0
         if args.trace:
             timing = traced(runner)
             cached = layers.cached_storage(spark)
@@ -238,12 +254,12 @@ def main(argv: list[str] | None = None) -> int:
             tracer.spans, read_counters(log_dir), wl, runner, session_s,
             timing["overhead_pct"], cached, peak_mb,
         )
-        values["op_p90_s"] = percentile(latencies(wl, timing), 90)
+        values["op_p90_s"] = percentile(timing["op_latencies_s"], 90)
         with open(os.path.join(run_dir, "spans.json"), "w") as fh:
             json.dump(layers.span_dump(tracer.spans), fh)
         names = spec["per_layer"]
     else:
-        values = end_to_end(setup_s, latencies(wl, timing), timing["pass_s"])
+        values = end_to_end(setup_s, timing)
         names = spec["end_to_end"]
     record.update({
         "workload": args.workload, "seed": args.seed, "trace": args.trace,

@@ -52,7 +52,8 @@ def test_workloads_match_the_program():
 
 
 def test_end_to_end_line_names_every_metric_with_its_unit():
-    values = run.end_to_end(9.5, [1.0, 2.0, 3.0], [6.0])
+    values = run.end_to_end(9.5, {"a": [1.0, 3.0], "b": [2.0]})
+    assert values["op_p50_s"] == 2.0 and values["pass_s"] == 4.0
     line = run.result_line(SPEC["end_to_end"], values, attempted=3, failed=0)
     assert set(line) == {"correct", "attempted", "failed", "metrics"}
     assert line["metrics"] == {

@@ -1,16 +1,15 @@
-"""The three workloads: what one run sets up, the operations it times, and
+"""The two workloads: what one run sets up, the operations it times, and
 how each result is checked against its DuckDB oracle.
 
 A workload is a list of *operations* grouped into *passes*:
 
-- ``dashboard``: one pass = the 13 Metabase cards, each one BI SQL request
+- ``query``: one pass = the 13 Metabase cards, each one BI SQL request
   through ``api.sql`` (dotted view names, ``LIMIT :k`` bound as a
-  parameter), in seeded order with seeded ``k``;
+  parameter), and five curation queries, one per operator family, all
+  in one seeded order with seeded ``k``;
 - ``refresh``: one pass = one operation, ``etl.run_pipeline`` over the
   seeded-shuffled CSVs (ingest → 9 partitioned marts → validation
-  checks), after ``api.release_caches``;
-- ``curation``: one pass = the 9 scale-tier curation queries in seeded
-  order.
+  checks), after ``api.release_caches``.
 
 Operations take the engine's public entry points and nothing else; the
 benchmark only times them, and checks their results afterwards, untimed.
@@ -27,34 +26,17 @@ from dataclasses import dataclass
 import numpy as np
 import pandas as pd
 
-CURATION_QUERIES = [
-    "dedup_simhash48_pairs",
-    "dedup_simhash64_pairs",
-    "dedup_embedding_lsh90",
-    "dedup_repeated_spans",
-    "graph_pagerank_top100",
-    "ann_pq_adc_topk",
-    "bm25_doc_ranking",
-    "rrf_hybrid_search",
-    "streaming_tumbling_counts",
-]
-# the operator family each curation query is built by (its plan and
-# execution time count toward that family's operators.*.exec_s)
+# one scale-tier curation query per operator family; the family builds
+# it, so its plan and execution time count toward that family's
+# operators.*.exec_s
 QUERY_FAMILY = {
     "dedup_simhash48_pairs": "operators.dedup",
-    "dedup_simhash64_pairs": "operators.dedup",
-    "dedup_embedding_lsh90": "operators.dedup",
-    "dedup_repeated_spans": "operators.dedup",
     "graph_pagerank_top100": "operators.graph",
     "ann_pq_adc_topk": "operators.simsearch",
     "bm25_doc_ranking": "operators.text",
-    "rrf_hybrid_search": "operators.text",
     "streaming_tumbling_counts": "streaming",
 }
-# run once before timing: it pays the session's first-job and JIT costs and
-# warms the documents read path the dedup family shares (none of the 9
-# queries reads the dedup frame caches, _shingles/_lsh_candidates)
-CURATION_WARMUP = "dedup_simhash64_pairs"
+CURATION_QUERIES = list(QUERY_FAMILY)
 # the refresh pass writes these marts (MART_PARTITIONS targets + deps)
 REFRESH_MARTS = [
     "stg_fight_results", "stg_event_details", "stg_title_fights_norm",
@@ -123,9 +105,6 @@ class Op:
 
 class Workload:
     name = ""
-    # latency percentiles are over what a user waits for: single requests
-    # on the dashboard, whole passes (a refresh, a batch) elsewhere
-    per_request = False
 
     def __init__(self, spark, built: dict, rng: np.random.Generator, run_dir: str):
         self.spark, self.built, self.rng, self.run_dir = spark, built, rng, run_dir
@@ -138,13 +117,20 @@ class Workload:
         """The engine-side part of set-up after the session starts (timed
         into ``setup_s``)."""
 
+    def warmup_ops(self) -> list[Op]:
+        """Operations the traced run runs once, checked, before it compares
+        untraced and traced copies, so that both copies run warm."""
+        return []
+
     def one_pass(self) -> list[Op]:
         raise NotImplementedError
 
 
-class Dashboard(Workload):
-    name = "dashboard"
-    per_request = True
+class Query(Workload):
+    """The read side on one warm session: the dashboard's cards and the
+    curation queries, interleaved in one seeded order."""
+
+    name = "query"
 
     def prepare(self) -> None:
         import duckdb
@@ -152,13 +138,10 @@ class Dashboard(Workload):
         from ufc_data_warehouse_spark.registry import REGISTRY
 
         specs = card_specs()
-        names = list(specs)
-        order = [names[i] for i in self.rng.permutation(len(names))]
-        ks = {n: int(k) for n, k in zip(order, self.rng.integers(*K_RANGE, len(order)))}
+        ks = {n: int(k) for n, k in zip(specs, self.rng.integers(*K_RANGE, len(specs)))}
         con = duckdb.connect()
         self.cards = []
-        for n in order:
-            spec = specs[n]
+        for n, spec in specs.items():
             model = REGISTRY.models[spec["model"]]
             schema = "fighters_extracted" + (f"_{model.schema}" if model.schema else "")
             dotted = f"{schema}.{model.alias or spec['model']}"
@@ -168,7 +151,11 @@ class Dashboard(Workload):
             con.unregister("m")
             self.cards.append((n, card_sql(spec, dotted, _SPARK_IMG, ":k"), ks[n], expected))
         con.close()
-        self.inputs = {"cards": [(n, k) for n, _, k, _ in self.cards], "sf": self.built["dash_sf"]}
+        self.expected = {q: load_oracle(self.built["oracles"], f"query__{q}") for q in CURATION_QUERIES}
+        names = [c[0] for c in self.cards] + CURATION_QUERIES
+        self.order = [names[i] for i in self.rng.permutation(len(names))]
+        self.inputs = {"order": self.order, "k": ks,
+                       "card_sf": self.built["dash_sf"], "curation_sf": self.built["curation_sf"]}
 
     def warm(self) -> None:
         from ufc_data_warehouse_spark import api
@@ -179,22 +166,40 @@ class Dashboard(Workload):
         for name in API_PERSISTED:
             api.build_model(self.spark, sf, name).count()
 
-    def one_pass(self) -> list[Op]:
+    def card_op(self, name: str, sql: str, k: int, expected: pd.DataFrame) -> Op:
         from ufc_data_warehouse_spark import api
 
         sf = self.built["dash_corpus"]
-        ops = []
-        for name, sql, k, expected in self.cards:
-            def run(phase, sql=sql, k=k):
-                with phase("api.sql.build"):
-                    df = api.sql(self.spark, sf, sql, args={"k": k})
-                with phase("api.sql.plan"):
-                    df._jdf.queryExecution().executedPlan()
-                with phase("api.sql.exec"):
-                    return df.toPandas()
 
-            ops.append(Op(name, run, lambda got, exp=expected: frames_match(got, exp)))
-        return ops
+        def run(phase):
+            with phase("api.sql.build"):
+                df = api.sql(self.spark, sf, sql, args={"k": k})
+            with phase("api.sql.plan"):
+                df._jdf.queryExecution().executedPlan()
+            with phase("api.sql.exec"):
+                return df.toPandas()
+
+        return Op(name, run, lambda got: frames_match(got, expected))
+
+    def curation_op(self, q: str) -> Op:
+        from ufc_data_warehouse_spark.extra_queries import EXTRA_QUERIES
+
+        sf = self.built["curation_corpus"]
+
+        def run(phase):
+            with phase(f"curation.{q}.build"):
+                df = EXTRA_QUERIES[q](self.spark, sf)
+            with phase(f"curation.{q}.plan"):
+                df._jdf.queryExecution().executedPlan()
+            with phase(f"curation.{q}.exec"):
+                return df.toPandas()
+
+        return Op(q, run, lambda got: frames_match(got, self.expected[q]), family=QUERY_FAMILY[q])
+
+    def one_pass(self) -> list[Op]:
+        ops = {c[0]: self.card_op(*c) for c in self.cards}
+        ops.update((q, self.curation_op(q)) for q in CURATION_QUERIES)
+        return [ops[n] for n in self.order]
 
 
 class Refresh(Workload):
@@ -217,6 +222,9 @@ class Refresh(Workload):
         self.csv_mb = sum(os.path.getsize(dst) for _, dst in copies) / 1e6
         self.expected = {m: load_oracle(self.built["oracles"], f"mart__{m}") for m in oracle_marts()}
         self.inputs = {"csv_rows": rows, "csv_mb": round(self.csv_mb, 3), "sf": self.built["refresh_sf"]}
+
+    def warmup_ops(self) -> list[Op]:
+        return self.one_pass()
 
     def one_pass(self) -> list[Op]:
         from ufc_data_warehouse_spark import api, etl
@@ -243,39 +251,7 @@ class Refresh(Workload):
         )
 
 
-class Curation(Workload):
-    name = "curation"
-
-    def prepare(self) -> None:
-        self.order = [CURATION_QUERIES[i] for i in self.rng.permutation(len(CURATION_QUERIES))]
-        self.expected = {q: load_oracle(self.built["oracles"], f"query__{q}") for q in CURATION_QUERIES}
-        self.inputs = {"query_order": self.order, "sf": self.built["curation_sf"]}
-
-    def warm(self) -> None:
-        from ufc_data_warehouse_spark.extra_queries import EXTRA_QUERIES
-
-        EXTRA_QUERIES[CURATION_WARMUP](self.spark, self.built["curation_corpus"]).count()
-
-    def one_pass(self) -> list[Op]:
-        from ufc_data_warehouse_spark.extra_queries import EXTRA_QUERIES
-
-        sf = self.built["curation_corpus"]
-        ops = []
-        for q in self.order:
-            def run(phase, q=q):
-                with phase(f"curation.{q}.build"):
-                    df = EXTRA_QUERIES[q](self.spark, sf)
-                with phase(f"curation.{q}.plan"):
-                    df._jdf.queryExecution().executedPlan()
-                with phase(f"curation.{q}.exec"):
-                    return df.toPandas()
-
-            ops.append(Op(q, run, lambda got, q=q: frames_match(got, self.expected[q]),
-                          family=QUERY_FAMILY[q]))
-        return ops
-
-
-WORKLOADS = {w.name: w for w in (Dashboard, Refresh, Curation)}
+WORKLOADS = {w.name: w for w in (Query, Refresh)}
 
 
 def normalize(frame: pd.DataFrame) -> pd.DataFrame:
