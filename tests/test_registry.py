@@ -205,16 +205,25 @@ def test_smoke_script_importable_and_consistent():
 def test_release_caches_empties_cache_manager(spark):
     """r6 ADVICE 3: api.release_caches must drop BOTH the _PERSISTED
     staging frames and untracked query-internal persists (title_reigns'
-    status_changes) from the session CacheManager."""
+    status_changes) from the session CacheManager, and the BI view
+    registration, so the next card request re-registers."""
     from ufc_data_warehouse_spark import api
 
-    api.build_model(spark, "/root/testdata/sf0.001", "title_reigns").count()
+    sf = "/root/testdata/sf0.001"
+    card = "SELECT fighter, wins FROM fighters_extracted.mv_fighters_by_wins"
+    api.build_model(spark, sf, "title_reigns").count()
+    before = sorted(map(tuple, api.sql(spark, sf, card).collect()), key=repr)
+    key_prefix = spark.sparkContext.applicationId
+    assert [k for k in api._views if k[0] == key_prefix]
     jcm = spark._jsparkSession.sharedState().cacheManager()
     assert not jcm.isEmpty(), "expected persisted frames after a build"
     api.release_caches(spark)
     assert jcm.isEmpty(), "release_caches left cached plans behind"
-    key_prefix = spark.sparkContext.applicationId
     assert not [k for k in api._frame_cache if k[0] == key_prefix]
+    assert not [k for k in api._views if k[0] == key_prefix]
+    # the next card request re-registers and answers the same
+    assert sorted(map(tuple, api.sql(spark, sf, card).collect()), key=repr) == before
+    assert [k for k in api._views if k[0] == key_prefix]
     # the next build repopulates the cache transparently
     api.build_model(spark, "/root/testdata/sf0.001", "title_reigns").count()
     assert not jcm.isEmpty()

@@ -3,9 +3,36 @@ using the reference's qualified names (charts.sh:154-498 shape)."""
 
 from __future__ import annotations
 
+import logging
+
 from tests.conftest import SF_DIR
 
+from ufc_data_warehouse_spark import api, session
 from ufc_data_warehouse_spark.api import build_model, register_views, sql
+from ufc_data_warehouse_spark.registry import REGISTRY
+
+OTHER_SF_DIR = (
+    "/root/testdata/sf0.01" if SF_DIR != "/root/testdata/sf0.01" else "/root/testdata/sf0.001"
+)
+WINS_CARD = "SELECT * FROM fighters_extracted.mv_fighters_by_wins"
+
+
+def _rows(df):
+    return sorted(map(tuple, df.collect()), key=repr)
+
+
+def _spy_builds(monkeypatch) -> list:
+    """Record every REGISTRY.build call's resolved model names."""
+    calls = []
+    real = REGISTRY.build
+
+    def spy(*a, **kw):
+        built = real(*a, **kw)
+        calls.append(list(built))
+        return built
+
+    monkeypatch.setattr(REGISTRY, "build", spy)
+    return calls
 
 
 def test_register_views_namespacing(spark):
@@ -113,3 +140,62 @@ def test_sql_macro_matches_column_expr(spark):
     assert all(r["col_form"] == r["sql_form"] for r in rows), rows
     plan = both._jdf.queryExecution().executedPlan().toString()
     assert "BatchEvalPython" not in plan and "ArrowEvalPython" not in plan
+
+
+def test_second_sql_on_same_session_resolves_no_models(spark, monkeypatch):
+    first = _rows(sql(spark, SF_DIR, WINS_CARD))
+    calls = _spy_builds(monkeypatch)
+    second = _rows(sql(spark, SF_DIR, WINS_CARD))
+    assert calls == [], "a registered session rebuilt model plans"
+    assert second == first
+
+
+def test_switching_sf_dir_reregisters_and_switching_back(spark, monkeypatch):
+    calls = _spy_builds(monkeypatch)
+    for sf_dir in (OTHER_SF_DIR, SF_DIR):
+        calls.clear()
+        card = _rows(sql(spark, sf_dir, WINS_CARD))
+        assert calls, f"no re-registration for {sf_dir}"
+        assert card == _rows(build_model(spark, sf_dir, "fighters_by_wins"))
+
+
+def test_new_session_gets_its_own_registration(spark, monkeypatch):
+    sql(spark, SF_DIR, WINS_CARD)
+    other = spark.newSession()
+    calls = _spy_builds(monkeypatch)
+    got = _rows(sql(other, SF_DIR, WINS_CARD))
+    assert calls, "the new session reused another session's registration"
+    assert got == _rows(build_model(spark, SF_DIR, "fighters_by_wins"))
+    keys = {k for k in api._views if k[0] == spark.sparkContext.applicationId}
+    assert len(keys) >= 2
+
+
+def test_card_sql_upper_case_and_back_quoted_names(spark):
+    expected = _rows(sql(spark, SF_DIR, WINS_CARD))
+    for ref in (
+        "FIGHTERS_EXTRACTED.MV_FIGHTERS_BY_WINS",
+        "`fighters_extracted`.`mv_fighters_by_wins`",
+        "`Fighters_Extracted`.mv_fighters_by_wins",
+    ):
+        assert _rows(sql(spark, SF_DIR, f"SELECT * FROM {ref}")) == expected, ref
+    # names inside longer identifiers are left alone
+    pattern = api._views[
+        (spark.sparkContext.applicationId, spark._jsparkSession.sessionUUID())
+    ][2]
+    for longer in (
+        "fighters_extracted.mv_fighters_by_wins_2",
+        "xfighters_extracted.mv_fighters_by_wins",
+        "cat.fighters_extracted.mv_fighters_by_wins",
+    ):
+        assert not pattern.search(longer), longer
+
+
+def test_locked_runtime_conf_warns_once(spark, monkeypatch, caplog):
+    monkeypatch.setitem(session.RUNTIME_CONFS, "spark.sql.warehouse.dir", "/nonexistent")
+    monkeypatch.setattr(session, "_locked_confs", set())
+    with caplog.at_level(logging.WARNING, logger=session.__name__):
+        session.apply_runtime_confs(spark)
+        session.apply_runtime_confs(spark)
+    warnings = [r for r in caplog.records if r.levelno == logging.WARNING]
+    assert len(warnings) == 1
+    assert "spark.sql.warehouse.dir" in warnings[0].getMessage()

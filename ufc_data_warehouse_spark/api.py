@@ -6,6 +6,8 @@ This is the reference's ``dbt run`` + Metabase-card surface in one place
 
 from __future__ import annotations
 
+import re
+
 from pyspark.sql import DataFrame, SparkSession
 
 from . import models  # noqa: F401 — populates the registry
@@ -55,10 +57,10 @@ def release_caches(spark: SparkSession) -> None:
     ``_PERSISTED`` staging cache for all sf_dirs plus query-internal
     persists that outlive their builder (title_reigns' status_changes;
     text_token_rarity's vocab): cached plans live in the session
-    CacheManager until session end otherwise (r6 ADVICE 3). Callers own
-    the trade-off: the next build re-derives everything (bench relies on
-    the warm cache for steady-state timings, so it does NOT call this
-    between runs — documented at bench.RUNS)."""
+    CacheManager until session end otherwise (r6 ADVICE 3) — and drop the
+    memoized raw-layer plans and the BI view registration of every session
+    on this SparkContext. Call it after the data under an sf_dir changes:
+    the next build, ``register_views`` or ``sql`` re-derives everything."""
     key_prefix = spark.sparkContext.applicationId
     for key in [k for k in _frame_cache if k[0] == key_prefix]:
         for df in _frame_cache.pop(key).values():
@@ -66,8 +68,9 @@ def release_caches(spark: SparkSession) -> None:
                 df.unpersist()
             except Exception:  # noqa: BLE001 — session already stopped
                 pass
-    for key in [k for k in _raw_cache if k[0] == key_prefix]:
-        _raw_cache.pop(key)  # lazy plan objects only — nothing to unpersist
+    for cache in (_raw_cache, _views):  # plan objects only — nothing to unpersist
+        for key in [k for k in cache if k[0] == key_prefix]:
+            cache.pop(key)
     try:
         spark.catalog.clearCache()  # untracked query-internal persists
     except Exception:  # noqa: BLE001
@@ -101,26 +104,65 @@ def _qualified_schema(custom: str | None) -> str:
     return f"{_DBT_TARGET_SCHEMA}_{custom}" if custom else _DBT_TARGET_SCHEMA
 
 
+# Registration per SparkSession — temp views live in the session's flat
+# namespace, so the key is (applicationId, sessionUUID), and one entry holds
+# the sf_dir currently registered there: a request for another sf_dir
+# re-registers. An entry keeps the dotted-name mapping and the compiled
+# rewrite pattern; the views hold the same lazy plans _raw_cache and
+# _frame_cache pin, so release_caches is the one invalidation hook.
+_views: dict[tuple[str, str], tuple[str, dict[str, str], re.Pattern]] = {}
+
+
+def _rewrite_pattern(mapping: dict[str, str]) -> re.Pattern:
+    """One case-insensitive pattern for every dotted name, each part
+    optionally back-quoted, matched only on identifier boundaries."""
+    names = "|".join(
+        "\\.".join(f"(?:`{re.escape(p)}`|{re.escape(p)})" for p in dotted.split("."))
+        for dotted in mapping
+    )
+    return re.compile(rf"(?<![\w.`])(?:{names})(?![\w`])", re.IGNORECASE)
+
+
+def _session_views(
+    spark: SparkSession, sf_dir: str
+) -> tuple[str, dict[str, str], re.Pattern]:
+    key = (spark.sparkContext.applicationId, spark._jsparkSession.sessionUUID())
+    memo = _views.get(key)
+    if memo is None or memo[0] != sf_dir:
+        built = build_all(spark, sf_dir)
+        mapping: dict[str, str] = {}
+        for name, model in REGISTRY.models.items():
+            schema = _qualified_schema(model.schema)
+            alias = model.alias or name
+            view = f"{schema}__{alias}"
+            df = built[name]
+            if df.sparkSession is not spark:
+                # the memoized frames belong to the session that first built
+                # them; rebind the plan so the view lands in this catalog
+                jdf = spark._jvm.org.apache.spark.sql.classic.Dataset.ofRows(
+                    spark._jsparkSession, df._jdf.logicalPlan()
+                )
+                df = DataFrame(jdf, spark)
+            df.createOrReplaceTempView(view)
+            mapping[f"{schema}.{alias}"] = view
+        memo = _views[key] = (sf_dir, mapping, _rewrite_pattern(mapping))
+    return memo
+
+
 def register_views(spark: SparkSession, sf_dir: str) -> dict[str, str]:
-    """Register every model as a temp view named ``<schema>__<alias>``;
-    returns the dotted name → view name mapping."""
-    built = build_all(spark, sf_dir)
-    mapping: dict[str, str] = {}
-    for name, model in REGISTRY.models.items():
-        schema = _qualified_schema(model.schema)
-        alias = model.alias or name
-        view = f"{schema}__{alias}"
-        built[name].createOrReplaceTempView(view)
-        mapping[f"{schema}.{alias}"] = view
-    return mapping
+    """Register every model as a temp view named ``<schema>__<alias>``
+    (once per session and sf_dir); returns the dotted name → view name
+    mapping."""
+    return dict(_session_views(spark, sf_dir)[1])
 
 
 def sql(
     spark: SparkSession, sf_dir: str, query: str, args: dict | list | None = None
 ) -> DataFrame:
     """Run BI-card SQL against the model layer: dotted reference names
-    (e.g. ``fighters_extracted_goat_status.mv_title_reigns``) are rewritten
-    to the registered flat temp views, then handed to ``spark.sql``.
+    (e.g. ``fighters_extracted_goat_status.mv_title_reigns``, in any case,
+    either part optionally back-quoted) are rewritten to the registered
+    flat temp views, then handed to ``spark.sql``.
 
     ``args`` enables parameterized SQL (named ``:param`` or positional
     ``?`` markers) — parameters bind as literals in the plan, never by
@@ -128,9 +170,9 @@ def sql(
     injection-safe and plan-cache-friendly. Spark's session-variable form
     (``DECLARE VARIABLE`` / ``SET VAR`` / ``EXECUTE IMMEDIATE``) works
     through here too since this is a thin veneer over ``spark.sql``."""
-    mapping = register_views(spark, sf_dir)
-    for dotted, view in mapping.items():
-        query = query.replace(dotted, view)
+    apply_runtime_confs(spark)
+    _, mapping, pattern = _session_views(spark, sf_dir)
+    query = pattern.sub(lambda m: mapping[m[0].replace("`", "").lower()], query)
     if args is not None:
         return spark.sql(query, args=args)
     return spark.sql(query)

@@ -18,9 +18,15 @@ Scale notes (100 TB design point):
 
 from __future__ import annotations
 
+import logging
 import os
 
 from pyspark.sql import SparkSession
+
+log = logging.getLogger(__name__)
+
+# Confs a session refused to set; each is warned about once per process.
+_locked_confs: set[str] = set()
 
 # Runtime-settable confs we also re-apply to externally provided sessions
 # (the verify driver owns its own SparkSession).
@@ -37,12 +43,16 @@ RUNTIME_CONFS: dict[str, str] = {
 
 
 def apply_runtime_confs(spark: SparkSession) -> SparkSession:
-    """Apply runtime-settable confs to an existing session (driver-owned)."""
+    """Apply runtime-settable confs to an existing session (driver-owned).
+    A conf the session refuses (locked down, or static) is skipped with a
+    one-time warning; queries guard themselves."""
     for k, v in RUNTIME_CONFS.items():
         try:
             spark.conf.set(k, v)
-        except Exception:
-            pass  # conf locked down → keep going; queries guard themselves
+        except Exception as exc:  # noqa: BLE001 — any refusal is non-fatal
+            if k not in _locked_confs:
+                _locked_confs.add(k)
+                log.warning("cannot set %s=%s on this session: %s", k, v, exc)
     return spark
 
 
