@@ -433,6 +433,36 @@ def test_graph_reliable_checkpoint_flag(spark, tmp_path):
     assert walked, "no reliable checkpoint files written under the dir"
 
 
+def test_graph_truncate_warns_once_when_conf_unreadable(monkeypatch, caplog):
+    """A session whose conf cannot be read falls back to localCheckpoint
+    with one warning per process, not a silent pass."""
+    import logging
+    from types import SimpleNamespace
+
+    from ufc_data_warehouse_spark.operators import graph
+
+    class _Conf:
+        def get(self, key, default=None):
+            raise RuntimeError("conf service unavailable")
+
+    class _Frame:
+        sparkSession = SimpleNamespace(conf=_Conf())
+
+        def localCheckpoint(self, eager=False):
+            return ("local", eager)
+
+        def checkpoint(self, eager=False):
+            return ("reliable", eager)
+
+    monkeypatch.setattr(graph, "_unreadable_confs", set())
+    with caplog.at_level(logging.WARNING, logger=graph.__name__):
+        assert graph._truncate(_Frame()) == ("local", False)
+        assert graph._truncate(_Frame(), eager=True) == ("local", True)
+    warnings = [r for r in caplog.records if r.levelno == logging.WARNING]
+    assert len(warnings) == 1
+    assert graph.RELIABLE_CHECKPOINT_CONF in warnings[0].getMessage()
+
+
 def test_graph_adjacency_loops_release_their_caches(spark):
     """r8: the adjacency-list graph loops persist their loop invariant and
     must unpersist it before returning — a second call must not see (or

@@ -54,9 +54,9 @@ def test_pipeline_end_to_end_with_partition_pruning(spark, tmp_path):
     assert pruned.count() == 4
 
 
-def test_pipeline_with_vacancy_builds_reigns(spark, tmp_path):
+def _reigns_inputs(tmp_path):
+    """Two title bouts plus one vacancy: enough for every default mart."""
     csv_dir = tmp_path / "csvs"
-    wh = tmp_path / "wh"
     os.makedirs(csv_dir)
     _write_csv(
         csv_dir / "ufc_event_details.csv",
@@ -80,13 +80,96 @@ def test_pipeline_with_vacancy_builds_reigns(spark, tmp_path):
         [["Dec 1, 1993", "A One", "UFC Heavyweight Championship",
           "retirement", "s"]],
     )
-    result = run_pipeline(spark, str(csv_dir), str(wh), vacancy_csv=str(vac))
+    return str(csv_dir), str(vac)
+
+
+def test_pipeline_with_vacancy_builds_reigns(spark, tmp_path):
+    csv_dir, vac = _reigns_inputs(tmp_path)
+    result = run_pipeline(spark, csv_dir, str(tmp_path / "wh"), vacancy_csv=vac)
     assert "title_reigns" in result.marts
     reigns = spark.read.parquet(result.marts["title_reigns"])
     rows = {(r["fighter"], r["end_reason"]) for r in reigns.collect()}
     # A One wins at UFC 1, the Dec 1 1993 retirement ends the reign before
     # C Three's UFC 2 win starts the next
     assert ("A One", "retirement") in rows
+
+
+_REIGN_CHECKS = {
+    "fct_fights": {"not_null": ["fight_id"], "unique": [["fight_id"]]},
+    "title_reigns": {"not_null": ["fighter"]},
+    "fighters_by_wins": {"unique": [["fighter"]]},
+}
+
+
+def test_pipeline_keeps_sequential_order_and_contents(spark, tmp_path):
+    """The concurrent phases return what a one-at-a-time run would: raw
+    tables in glob order, marts and metrics in topological order, and
+    every mart holding exactly its model's rows."""
+    from ufc_data_warehouse_spark.etl import MART_PARTITIONS
+    from ufc_data_warehouse_spark.registry import REGISTRY
+    from ufc_data_warehouse_spark.sources.ingest import load_raw
+
+    csv_dir, vac = _reigns_inputs(tmp_path)
+    wh = str(tmp_path / "wh")
+    result = run_pipeline(spark, csv_dir, wh, vacancy_csv=vac, checks=_REIGN_CHECKS)
+
+    assert list(result.raw_tables) == [
+        "dim_ufc_event_details",
+        "fact_ufc_fight_results",
+        "title_status_changes_outside_octagon",
+    ]
+    order = REGISTRY.topo_order(list(MART_PARTITIONS))
+    assert list(result.marts) == order
+    assert list(result.metrics) == order
+    assert list(result.checks) == list(_REIGN_CHECKS)
+
+    expected = REGISTRY.build(load_raw(spark, wh), order)
+    for name in order:
+        want = expected[name]
+        # an empty partitioned mart has no file to infer a schema from
+        got = spark.read.schema(want.schema).parquet(result.marts[name])
+        got = got.select(*want.columns)
+        assert sorted(map(tuple, got.collect()), key=repr) == sorted(
+            map(tuple, want.collect()), key=repr
+        ), name
+        assert result.metrics[name]["n_rows"] == want.count(), name
+    assert all(n == 0 for c in result.checks.values() for n in c.values())
+
+
+def test_pipeline_jobs_inherit_the_callers_job_group(spark, tmp_path):
+    """Every job of the refresh, run on worker threads, lands in the
+    caller's job group: none runs ungrouped, so cancelJobGroup covers the
+    whole pipeline."""
+    csv_dir, vac = _reigns_inputs(tmp_path)
+    sc = spark.sparkContext
+    tracker = sc.statusTracker()
+    ungrouped = set(tracker.getJobIdsForGroup(None))
+    sc.setJobGroup("refresh-test", "pipeline under one job group")
+    try:
+        result = run_pipeline(
+            spark, csv_dir, str(tmp_path / "wh"), vacancy_csv=vac,
+            checks=_REIGN_CHECKS,
+        )
+    finally:
+        sc._jsc.clearJobGroup()
+    assert set(tracker.getJobIdsForGroup(None)) <= ungrouped
+    grouped = tracker.getJobIdsForGroup("refresh-test")
+    # at least one job per raw table, mart write and check
+    assert len(grouped) >= (
+        len(result.raw_tables) + len(result.marts) + len(result.checks)
+    )
+
+
+def test_repeated_pipelines_do_not_grow_the_thread_count(spark, tmp_path):
+    import threading
+
+    csv_dir, vac = _reigns_inputs(tmp_path)
+    baseline = threading.active_count()
+    counts = []
+    for i in range(3):
+        run_pipeline(spark, csv_dir, str(tmp_path / f"wh{i}"), vacancy_csv=vac)
+        counts.append(threading.active_count())
+    assert counts == [baseline] * 3
 
 
 def test_incremental_overwrite_touches_only_changed_partitions(spark, tmp_path):

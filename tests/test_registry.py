@@ -62,6 +62,127 @@ def test_materialize_layout(spark, tmp_path):
     assert df.count() > 0
 
 
+def test_materialize_failure_raises_after_every_write(spark, tmp_path):
+    """One mart failing (a partition column it lacks) raises that mart's
+    AnalysisException only once the concurrent writes have all finished:
+    the sibling mart is written, no job is left running and no worker
+    thread outlives the call."""
+    import threading
+
+    from pyspark.errors import AnalysisException
+
+    raw = ufc_raw_tables(spark, SF_DIR)
+    baseline = threading.active_count()
+    with pytest.raises(AnalysisException, match="no_such_col"):
+        REGISTRY.materialize(
+            raw,
+            str(tmp_path),
+            targets=["fighters_by_wins", "fct_fights"],
+            partition_by={"fighters_by_wins": ["no_such_col"]},
+        )
+    assert spark.sparkContext.statusTracker().getActiveJobsIds() == []
+    assert threading.active_count() == baseline
+    assert os.path.exists(tmp_path / "core" / "fct_fights" / "_SUCCESS")
+
+
+def _within(seconds, fn):
+    """Run ``fn`` on a thread and return what it returned or raised; fail
+    the test if it has not finished after ``seconds``."""
+    import threading
+
+    out = {}
+
+    def run():
+        try:
+            out["value"] = fn()
+        except Exception as exc:  # noqa: BLE001 — handed back to the test
+            out["error"] = exc
+
+    t = threading.Thread(target=run)
+    t.start()
+    t.join(seconds)
+    assert not t.is_alive(), f"still running after {seconds} s"
+    return out
+
+
+def test_materialize_dag_under_thread_switch_stress(spark, tmp_path):
+    """A 16-model DAG (more worker threads than cores) with the interpreter
+    switching threads as often as it can: each model's plan is built once,
+    from the frames of the models under it, and written once, in
+    topological order; a model whose build raises fails its dependents
+    with that error instead of leaving them waiting for its frame."""
+    import functools
+    import sys
+
+    from pyspark.sql import functions as F
+
+    built: list[str] = []
+
+    def dag(failing: str | None) -> Registry:
+        r = Registry()
+        for i in range(16):
+            deps = ["src"] if i == 0 else sorted({f"m{i - 1}", f"m{i // 2}"})
+
+            def fn(d, deps=deps, name=f"m{i}"):
+                built.append(name)
+                if name == failing:
+                    raise ValueError(f"cannot build {name}")
+                frames = [d[dep].select("id") for dep in deps]
+                return functools.reduce(DataFrame.unionByName, frames).distinct()
+
+            r.model(f"m{i}", deps=deps)(fn)
+        return r
+
+    src = {"src": spark.range(10).withColumn("x", F.lit(1))}
+    interval = sys.getswitchinterval()
+    sys.setswitchinterval(1e-6)
+    try:
+        r = dag(None)
+        metrics: dict = {}
+        ok = _within(300, lambda: r.materialize(src, str(tmp_path / "ok"), metrics=metrics))
+        built_ok = sorted(built)
+        failed = _within(300, lambda: dag("m5").materialize(src, str(tmp_path / "bad")))
+    finally:
+        sys.setswitchinterval(interval)
+    assert "error" not in ok, ok.get("error")
+    assert list(ok["value"]) == r.topo_order() == list(metrics)
+    assert built_ok == sorted(r.models)  # each plan built exactly once
+    assert all(m["n_rows"] == 10 for m in metrics.values())
+    assert str(failed["error"]) == "cannot build m5"
+
+
+def test_materialize_writes_one_jdbc_mart_at_a_time(spark, monkeypatch):
+    """The JDBC sink's fan-out cap is per mart, so concurrent marts would
+    multiply it: JDBC writes never overlap, and every mart is written."""
+    import threading
+    import time
+
+    from ufc_data_warehouse_spark import registry
+
+    raw = ufc_raw_tables(spark, SF_DIR)
+    lock = threading.Lock()
+    active, peak, tables = [0], [0], []
+
+    def fake_write_jdbc(df, url, table, options=None, num_partitions=None):
+        with lock:
+            active[0] += 1
+            peak[0] = max(peak[0], active[0])
+        time.sleep(0.2)
+        with lock:
+            active[0] -= 1
+            tables.append(table)
+
+    monkeypatch.setattr(registry, "write_jdbc", fake_write_jdbc)
+    written = REGISTRY.materialize(
+        raw, "unused", targets=["fct_fights", "fighters_by_wins"],
+        jdbc_url="jdbc:stub",
+    )
+    order = REGISTRY.topo_order(["fct_fights", "fighters_by_wins"])
+    assert list(written) == order
+    assert sorted(tables) == sorted(written.values())
+    assert peak[0] == 1
+
+
 def test_registries_complete_under_any_import_order():
     """Regression: importing analytics_queries BEFORE extra_queries used
     to trip a circular import that silently snapshotted the analytics

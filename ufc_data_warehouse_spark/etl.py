@@ -17,14 +17,16 @@ Usage::
 
 from __future__ import annotations
 
+import functools
 from dataclasses import dataclass, field
 
 from pyspark.sql import SparkSession
 
 from . import models  # noqa: F401 — populates the registry
 from .registry import REGISTRY
-from .session import apply_runtime_confs
+from .session import apply_runtime_confs, run_concurrently
 from .sources.ingest import ingest_dir, load_raw
+from .validation import run_checks
 
 # analytics marts worth materializing, with their partition keys
 MART_PARTITIONS: dict[str, list[str]] = {
@@ -57,7 +59,13 @@ def run_pipeline(
 
     ``checks`` maps mart name → keyword rules for ``validation.run_checks``
     (the dbt `dbt test`-after-`dbt run` step); violation counts land in
-    ``result.checks[mart]`` keyed by check name."""
+    ``result.checks[mart]`` keyed by check name.
+
+    Each phase (ingest, marts, checks) runs its independent Spark jobs
+    concurrently on worker threads (``session.run_concurrently``), so one
+    job's driver-side planning overlaps another's execution. The workers
+    inherit the caller's job group and description: set them before the
+    call and ``cancelJobGroup`` stops the whole refresh."""
     apply_runtime_confs(spark)
     result = PipelineResult()
     result.raw_tables = ingest_dir(spark, csv_dir, warehouse_dir, vacancy_csv)
@@ -85,15 +93,17 @@ def run_pipeline(
         partition_by={k: v for k, v in MART_PARTITIONS.items() if v},
         metrics=result.metrics,
     )
-    for name, rule_kw in (checks or {}).items():
-        if name in result.marts:
-            from .validation import run_checks as _run_checks
 
-            mart_df = spark.read.parquet(result.marts[name])
-            result.checks[name] = {
-                r["check_name"]: r["n_violations"]
-                for r in _run_checks(mart_df, **rule_kw).collect()
-            }
+    def check(name: str, rule_kw: dict) -> dict[str, int]:
+        mart_df = spark.read.parquet(result.marts[name])
+        return {
+            r["check_name"]: r["n_violations"]
+            for r in run_checks(mart_df, **rule_kw).collect()
+        }
+
+    checked = [(n, kw) for n, kw in (checks or {}).items() if n in result.marts]
+    counts = run_concurrently(spark, [functools.partial(check, *c) for c in checked])
+    result.checks = {name: n for (name, _), n in zip(checked, counts)}
     return result
 
 

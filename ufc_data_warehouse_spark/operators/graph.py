@@ -31,12 +31,18 @@ global scalar per iteration). Documented so the oracle replays it.
 
 from __future__ import annotations
 
+import logging
+
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
+
+log = logging.getLogger(__name__)
 
 # Session conf that swaps executor-local lineage truncation for reliable,
 # directory-backed checkpoints (r7 VERDICT "what's wrong" item 2).
 RELIABLE_CHECKPOINT_CONF = "spark.ufc.graph.reliableCheckpoint"
+# Confs a session could not read; each is warned about once per process.
+_unreadable_confs: set[str] = set()
 
 
 def _truncate(df: DataFrame, eager: bool = False) -> DataFrame:
@@ -56,8 +62,13 @@ def _truncate(df: DataFrame, eager: bool = False) -> DataFrame:
     flag = "false"
     try:
         flag = df.sparkSession.conf.get(RELIABLE_CHECKPOINT_CONF, "false")
-    except Exception:  # noqa: BLE001 — conf service unavailable: local default
-        pass
+    except Exception as exc:  # noqa: BLE001 — unreadable conf: local default
+        if RELIABLE_CHECKPOINT_CONF not in _unreadable_confs:
+            _unreadable_confs.add(RELIABLE_CHECKPOINT_CONF)
+            log.warning(
+                "cannot read %s, truncating with localCheckpoint: %s",
+                RELIABLE_CHECKPOINT_CONF, exc,
+            )
     if str(flag).lower() == "true":
         # reliable checkpoints write a job per call; keep them eager so the
         # write happens at a deterministic point (lazy reliable checkpoints

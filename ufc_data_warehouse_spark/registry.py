@@ -13,19 +13,28 @@ stack inlining the reference delegates to Postgres, we delegate to Catalyst
 (predicate pushdown, column pruning, join reordering through every layer
 for free — SURVEY §4).
 
-``materialize`` is the ``dbt run --full-refresh`` analog: write chosen marts
-to partitioned parquet. At the 100 TB design point only the marts are
-materialized; intermediate models stay as logical-plan views so no shuffle
-or scan is paid twice.
+``materialize`` is the ``dbt run --full-refresh`` analog: write every model
+on the chosen marts' dependency closure to partitioned parquet. Each write
+runs its model's whole lazy plan from the sources; nothing written is read
+back, so a mart re-runs the jobs of every model under it (writing
+``fct_title_reigns`` replays ``title_reigns``' lineage). Like dbt's thread
+pool over independent DAG nodes, the writes run concurrently: while one
+model's job plans on the driver, another's executes.
 """
 
 from __future__ import annotations
 
+import contextlib
+import functools
+import threading
+from concurrent.futures import Future
 from dataclasses import dataclass, field
 from typing import Callable
 
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+
+from .session import run_concurrently
 
 ModelFn = Callable[[dict[str, DataFrame]], DataFrame]
 
@@ -119,6 +128,15 @@ class Registry:
         ``partition_by`` maps model name → partition columns (natural keys,
         e.g. weight_category) — the 100 TB layout knob.
 
+        Every model in ``topo_order(targets)`` gets its own worker thread
+        (``session.run_concurrently``). A worker builds its model's plan as
+        soon as the frames of the models under it exist, then writes it; the
+        writes overlap. The result keeps topological order, and the first
+        failure in that order is raised after every write has finished.
+        JDBC writes still run one at a time: ``jdbc_num_partitions`` caps
+        the connection fan-out per mart, and concurrent marts would
+        multiply it.
+
         When ``metrics`` (a dict) is passed, each mart write is wrapped in
         ``df.observe`` and per-mart row counts land in ``metrics[name]`` —
         pipeline observability measured DURING the write itself (the
@@ -134,12 +152,26 @@ class Registry:
                 "partition_by is a parquet-layout knob; JDBC tables have no "
                 "directory partitioning — drop it or use the parquet sink"
             )
-        resolved = self.build(sources, targets)
-        written: dict[str, str] = {}
-        for name in self.topo_order(targets):
+        order = self.topo_order(targets)
+        frames: dict[str, Future] = {name: Future() for name in order}
+        # the fan-out cap is per mart: concurrent JDBC writes would multiply it
+        sink_slot = threading.Lock() if jdbc_url is not None else contextlib.nullcontext()
+
+        def frame(name: str) -> DataFrame:
+            if name in sources:
+                return sources[name]  # caller supplied a precomputed frame
+            # every model under this one, so build() resolves this one only
+            upstream = {d: frames[d].result() for d in self.topo_order([name])[:-1]}
+            return self.build({**sources, **upstream}, [name])[name]
+
+        def write(name: str) -> tuple[str, dict | None]:
+            try:
+                df = frame(name)
+            except BaseException as exc:
+                frames[name].set_exception(exc)
+                raise
+            frames[name].set_result(df)
             model = self.models[name]
-            path = f"{warehouse_dir}/{model.layer}/{name}"
-            df = resolved[name]
             obs = None
             if metrics is not None:
                 from pyspark.sql import Observation
@@ -153,20 +185,25 @@ class Registry:
                     if isinstance(jdbc_num_partitions, dict)
                     else jdbc_num_partitions
                 )
-                write_jdbc(
-                    df, jdbc_url, path, options=jdbc_options,
-                    num_partitions=n_parts,
-                )
+                with sink_slot:
+                    write_jdbc(
+                        df, jdbc_url, path, options=jdbc_options,
+                        num_partitions=n_parts,
+                    )
             else:
+                path = f"{warehouse_dir}/{model.layer}/{name}"
                 writer = df.write.mode("overwrite")
                 cols = (partition_by or {}).get(name)
                 if cols:
                     writer = writer.partitionBy(*cols)
                 writer.parquet(path)
-            if obs is not None:
-                metrics[name] = obs.get
-            written[name] = path
-        return written
+            return path, obs.get if obs is not None else None
+
+        spark = next(iter(sources.values())).sparkSession if sources else SparkSession.active()
+        done = run_concurrently(spark, [functools.partial(write, name) for name in order])
+        if metrics is not None:
+            metrics.update((name, rows) for name, (_, rows) in zip(order, done))
+        return {name: path for name, (path, _) in zip(order, done)}
 
 
 def write_jdbc(

@@ -17,8 +17,10 @@ analysis until that name exists — so the resolver retries unresolved
 flows until fixpoint (the lazy-discovery analog of the registry.py
 topo-sort, which needs explicit dep lists). Materialized views write
 parquet and re-register as reads — true materialization: downstream
-plans start from the scan, not an expanded view tree (same plan-
-truncation rationale as `etl.run_pipeline`).
+plans start from the scan, not an expanded view tree. (`etl.run_pipeline`
+does not do this: each of its marts is written from its full lazy plan
+over the raw tables, replaying the lineage of every model under it.)
+Flows run one at a time.
 """
 
 from __future__ import annotations

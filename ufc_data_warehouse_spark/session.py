@@ -20,8 +20,14 @@ from __future__ import annotations
 
 import logging
 import os
+from collections.abc import Callable
+from concurrent.futures import ThreadPoolExecutor
+from typing import TypeVar
 
 from pyspark.sql import SparkSession
+from pyspark.util import inheritable_thread_target
+
+T = TypeVar("T")
 
 log = logging.getLogger(__name__)
 
@@ -54,6 +60,43 @@ def apply_runtime_confs(spark: SparkSession) -> SparkSession:
                 _locked_confs.add(k)
                 log.warning("cannot set %s=%s on this session: %s", k, v, exc)
     return spark
+
+
+def run_concurrently(spark: SparkSession, units: list[Callable[[], T]]) -> list[T]:
+    """Run independent units of Spark work at once, one thread each, and
+    return their results in ``units`` order.
+
+    While one unit builds and plans its job on the driver (Python plan
+    construction, Catalyst, codegen, AQE re-planning), another's job
+    executes, so the task slots stop idling through driver-only work.
+    Each unit runs under its own copy of the caller's local properties
+    (job group, description, scheduler pool) and session tags, so
+    ``cancelJobGroup`` and job-group accounting cover every unit's jobs.
+    It also runs with ``spark`` as its thread's active session. The width
+    is the number of units, never a task-slot count: a unit may
+    block on another unit's result and must not starve for a thread.
+    Every unit finishes before this returns; if any failed, the first
+    failure in ``units`` order is raised.
+    """
+    if not units:
+        return []
+
+    def in_session(unit: Callable[[], T]) -> Callable[[], T]:
+        @inheritable_thread_target(spark)
+        def run() -> T:
+            # a worker's JVM thread has no active session, and without one
+            # driver-side SQLConf reads fall back to defaults (ANSI on, the
+            # JVM time zone) instead of this session's confs
+            SparkSession._get_j_spark_session_class(spark._jvm).setActiveSession(
+                spark._jsparkSession
+            )
+            return unit()
+
+        return run
+
+    with ThreadPoolExecutor(max_workers=len(units)) as pool:
+        futures = [pool.submit(in_session(u)) for u in units]
+    return [f.result() for f in futures]
 
 
 def get_spark(

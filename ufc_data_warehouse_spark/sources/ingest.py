@@ -18,12 +18,15 @@ shuffle); raw outputs can be bucketed/partitioned here when a key is known.
 
 from __future__ import annotations
 
+import functools
 import glob
 import os
 import re
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+
+from ..session import run_concurrently
 
 # /root/reference/dlt/load.py:18-22
 FACT_TABLES = {"ufc_fight_details", "ufc_fight_results", "ufc_fight_stats"}
@@ -110,7 +113,9 @@ def ingest_dir(
 ) -> dict[str, str]:
     """Glob *.csv → raw parquet tables, full-replace (dlt/load.py:45-64).
 
-    Returns table name → parquet path.
+    The tables are independent, so their writes run concurrently
+    (``session.run_concurrently``). Returns table name → parquet path, in
+    glob order with the vacancy table last.
     """
     paths = sorted(glob.glob(os.path.join(csv_dir, "*.csv")))
     if not paths:
@@ -118,11 +123,12 @@ def ingest_dir(
     jobs: list[tuple[str, str]] = [(table_name(p), p) for p in paths]
     if vacancy_csv is not None:
         jobs.append((VACANCY_TABLE, vacancy_csv))
-    written: dict[str, str] = {}
-    for name, path in jobs:
-        out = os.path.join(warehouse_dir, "raw", name)
-        read_csv_all_string(spark, path).write.mode("overwrite").parquet(out)
-        written[name] = out
+    written = {name: os.path.join(warehouse_dir, "raw", name) for name, _ in jobs}
+
+    def write(name: str, path: str) -> None:
+        read_csv_all_string(spark, path).write.mode("overwrite").parquet(written[name])
+
+    run_concurrently(spark, [functools.partial(write, *job) for job in jobs])
     return written
 
 
